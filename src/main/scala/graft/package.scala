@@ -14,9 +14,11 @@
   *    TIMESTAMP(NANOS) → micros fix).
   *  - `graft.queries` — the declared query catalog by tier (Core /
   *    Relational / Cep / TextOps / VectorOps).
-  *  - `graft.streaming` — StreamOps windows/joins/dedup, CepSequence and
-  *    N-step PatternMatch (flatMapGroupsWithState), CepSequenceTws and
-  *    AbsenceDetector (transformWithState + event-time timers),
+  *  - `graft.streaming` — StreamOps windows/joins/dedup; ChainEngine, the
+  *    one flatMapGroupsWithState engine for every unquantified MATCH
+  *    PATTERN chain (sequences, N-step chains, optional steps, absence,
+  *    MEASURES), beside the quantified/skip/permute/overlap detectors;
+  *    CepSequenceTws (transformWithState + event-time timers);
   *    ContinuousQueries runtime management, RocksDB StreamingConf.
   *  - `graft.operators` — TemporalJoins (interval/as-of), Dedup
   *    (exact/shingles/MinHash-LSH/verifyJaccard/simhash), Components

@@ -199,7 +199,7 @@ object Cep {
 
     // C6 — CEP sequence: for each signup, the FIRST purchase by the same
     // user within 30 min (AFTER MATCH SKIP TO NEXT ROW semantics). The
-    // streaming twin is graft.streaming.CepSequence (state machine per key).
+    // streaming twin is graft.streaming.ChainEngine (state machine per key).
     "q_cep_seq" -> ((s, dir) => {
       val e = T(s, dir, "events")
       val a = e.filter(col("event_type") === "signup")
@@ -221,7 +221,8 @@ object Cep {
 
     // C6b — CEP absence pattern: signups NOT followed by a purchase within
     // 30 min (negation is the other half of sequence CEP; streaming twin
-    // is AbsenceDetector — event-time timers fire on the deadline).
+    // is ChainEngine's absence form — event-time timers fire on the
+    // deadline).
     "q_cep_absence" -> ((s, dir) => {
       val e = T(s, dir, "events")
       val a = e.filter(col("event_type") === "signup")
@@ -698,8 +699,8 @@ object Cep {
     // composite-pivot prefix (take/skip per q_pattern_opt) feeds the
     // absence anti-join — signups that reached a view (with or without
     // an intervening click) and then saw NO purchase inside the window.
-    // Streams via ChainAbsenceDetector.detectOptWhere (replay ≡ batch
-    // pinned in ChainAbsenceSpec + RecoverySpec).
+    // Streams via ChainEngine (replay ≡ batch pinned in ChainAbsenceSpec
+    // + RecoverySpec).
     "q_pattern_optabs" -> ((s, dir) => {
       graft.Tables.load(s, dir)
       graft.streaming.CepSql.sql(s,

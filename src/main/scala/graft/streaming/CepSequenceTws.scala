@@ -8,10 +8,11 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, 
 /** An open first-step event awaiting its match (TWS state row). */
 case class OpenFirst(id: Long, ts: Timestamp)
 
-/** [[CepSequence]] re-expressed on Spark 4's `transformWithState`
+/** The 2-step chain `first THEN second` on Spark 4's `transformWithState`
   * (SURVEY §7.1 M4 named this the preferred API, with
-  * flatMapGroupsWithState as the fallback — graft ships both; the twin
-  * test pins them to identical output).
+  * flatMapGroupsWithState as the fallback — [[ChainEngine]] runs every
+  * unquantified chain on the latter; StreamingTwinSpec pins this one to
+  * the batch `q_cep_seq`).
   *
   * What the new API buys at scale: typed per-key `ListState` in the state
   * store (RocksDB-ready), and EVENT-TIME TIMERS — expired-window pruning

@@ -969,8 +969,9 @@ object CepSql {
     * `spark.graft.cep.typeColumn` / `spark.graft.cep.idColumn` on the
     * injected-parser path. Batch/interactive surface: the rewrite uses a
     * ranking window (sequence) / anti join (absence), which Structured
-    * Streaming does not support incrementally — the streaming twins are
-    * [[CepSequence]] / [[AbsenceDetector]] (N-step: [[PatternMatch]]).
+    * Streaming does not support incrementally — the streaming twin of
+    * every unquantified form is [[ChainEngine]], reached from pattern text
+    * through [[ContinuousQueries.submitPattern]].
     *
     * A statement that *mentions* MATCH PATTERN but does not match the
     * grammar end-to-end is rejected loudly — a silent pass-through would

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit,
+  timestamp_micros, transform}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Runtime continuous-query management (SURVEY §2.9 C7 / §3.1 EP3).
@@ -61,92 +63,43 @@ object ContinuousQueries {
     submitMemory(df, name, outputMode)
   }
 
-  /** EP3 for CEP pattern TEXT on a LIVE stream: the batch MATCH PATTERN
-    * rewrite (ranking window / anti join) cannot run incrementally, so a
-    * pattern statement submitted here dispatches to the STREAMING
-    * detector with the same proven semantics instead:
+  /** Run MATCH PATTERN text continuously on a streaming view. The batch
+    * rewrite ([[CepSql.translate]]) ranks and anti-joins, which cannot run
+    * incrementally, so each form goes to a stateful engine with the same
+    * semantics and the batch rewrite's match columns:
     *
-    *  - `a THEN b`            → [[CepSequence]]      (≡ q_cep_seq)
-    *  - `a THEN NOT b`        → [[AbsenceDetector]]  (≡ q_cep_absence)
-    *  - `a THEN b THEN c …`   → [[PatternMatch]]     (≡ q_pattern_chain)
-    *  - `a THEN b THEN NOT c` → [[ChainAbsenceDetector]] (r7 — absence
-    *    after a matched prefix, watermark-timer emission)
-    *  - `a{m,} THEN [NOT] b`  → [[RunDetector]]      (≡ q_pattern_times,
-    *    completed runs; the NOT form keeps only timed-out runs)
-    *  - `… AFTER MATCH SKIP PAST LAST ROW` → [[SkipDetector]]
-    *    (≡ q_pattern_skip — greedy non-overlapping, watermark-finalized)
-    *  - `a THEN b? THEN c …`  → [[PatternMatch.detectOpt]] (r7 —
-    *    optional mid-chain steps, per-event skip decision); with a
-    *    trailing `THEN NOT` → [[ChainAbsenceDetector.detectOptWhere]]
-    *    (r8 — the same skip decision inside the absence prefix)
-    *  - `PERMUTE(a, b)`       → two directional [[CepSequence]]
-    *    detectors unioned, tagged by the anchor's event name (r7)
-    *  - `… MEASURES fn(col), ev.col, MATCH_NUMBER()` →
-    *    [[PatternMatch.detectMeasures]] (r7, generalized r8 — span
-    *    aggregates carried per open partial over ANY numeric converter
-    *    column: value, event_id, user_id); span aggregates over
-    *    QUANTIFIED chains → [[RunChainDetector.detectMeasures]] (r8 —
-    *    FIRST/LAST boundary refs over numeric converter columns stream
-    *    there too; MATCH_NUMBER/class refs/ts boundaries on quantified
-    *    chains stay batch-routed, loudly)
+    * | form | engine or detector | output columns |
+    * |------|--------------------|----------------|
+    * | `a THEN b` (no condition) | [[ChainEngine]] | user_id, sid, pid, s_ts, p_ts |
+    * | `a THEN NOT b` | [[ChainEngine]] | user_id, sid, s_ts |
+    * | `a THEN b THEN c …`, conditioned chains | [[ChainEngine]] | user_id, step_ids, start_ts, end_ts |
+    * | `a THEN b … THEN NOT z` | [[ChainEngine]] | user_id, step_ids (the prefix), start_ts, end_ts |
+    * | optional `b?` steps, with or without `THEN NOT` | [[ChainEngine]] | user_id, step_ids, step_ts (null for a skipped step), start_ts, end_ts |
+    * | `MEASURES …` on an unquantified chain, with or without `THEN NOT` | [[ChainEngine]] | user_id, step_ids, start_ts, end_ts, one column per measure |
+    * | `PERMUTE(a, b)` | two [[ChainEngine]] legs | user_id, first_ev, first_id, second_id, first_ts, second_ts |
+    * | `PERMUTE(a, b, c)` | [[Permute3Detector]] | user_id, first_ev, id_1…id_3, ts_1…ts_3 |
+    * | `… AFTER MATCH SKIP PAST LAST ROW` | [[SkipDetector]] | user_id, id_1…id_n, ts_1…ts_n |
+    * | `a{m,} THEN [NOT] b` | [[RunDetector]] | user_id, run_len, run_start, run_end, next_follow |
+    * | `a{1,}? THEN b`, `a{m,}? THEN NOT b` | [[LazyRunDetector]] | as [[RunDetector]] |
+    * | other quantified chains, `THEN NOT` after a quantified prefix | [[RunChainDetector]] | user_id, step_vals, step_ts, start_ts, end_ts |
+    * | `MEASURES` on a quantified chain | [[RunChainDetector]] | user_id, step_vals, step_ts, start_ts, end_ts, one column per measure |
+    * | overlap head `A THEN B{m,}[?] [THEN C[{k,}] … [THEN NOT Z]]` | [[OverlapRunDetector]] | user_id, id_1, len_2, [id_i or len_i …], ts_1, ts_2, [ts_i …] |
+    * | `MEASURES` on an overlap head | [[OverlapRunDetector]] | user_id, step_vals, step_ts, start_ts, end_ts, one column per measure |
     *
-    * Alternation steps (`click|view`, r7) dispatch through every arm —
-    * the detectors take event-type classes. Quantified chains (`{m,}`
-    * beyond the 2-step head form) dispatch to [[RunChainDetector]], and
-    * since r8 `THEN NOT` after a quantified prefix dispatches to
-    * [[RunChainDetector.detectAbsent]]; RELUCTANT quantifiers (`{m,}?`,
-    * r8) ride the same chain arms via the detector's lazy mode. 3-way
-    * PERMUTE streams since r10 ([[Permute3Detector]] — per-anchor
-    * dual-order tracker with held arm-2 release), as do the 2-step
-    * reluctant HEAD forms — `{1,}?` and the reluctant absence at any m
-    * ([[LazyRunDetector]]). A quantified step whose class OVERLAPS its
-    * predecessor's streams since r11, generalized in r12 to the whole
-    * greedy head family — `A THEN B{m,}` plus ANY tail
-    * `THEN C[{k,}] THEN D … [THEN NOT Z]`, tail classes free to
-    * overlap B's and positive tail steps QUANTIFIED since r13 —
-    * completion AND absent forms (each quantified tail step gets its
-    * own shared island tracker; pendings advance at island close —
-    * the batch rank-1-by-run_start join made incremental; the
-    * trailing NOT is a class, never a run)
-    * ([[OverlapRunDetector]] — one shared island tracker per key, the
-    * batch GLOBAL gaps-and-islands made incremental; pendings CHAIN
-    * through the tail steps, the trailing NOT resolving at the
-    * watermark deadline), and MEASURES over the whole completion
-    * family — the 2-step head (r12: per-anchor span accumulators +
-    * island boundary slots) and since r13 any completion tail,
-    * unquantified OR quantified (pendings carry the span accumulators
-    * to their final tail match; tail class refs capture per step;
-    * tail-ISLAND boundary refs at their island's close), plus
-    * MATCH_NUMBER (r13 session 2: completions HOLD until no live
-    * anchor/pending with a smaller (ts_1, id_1) remains, then release
-    * in sort order on a persistent per-key counter —
-    * [[OverlapRunDetector.detectMeasures]]). RELUCTANT overlap heads
-    * stream WITH tails since r14 (verdict r13 #3): the truncated match
-    * fixes at the island's m-th event, which then plays the island
-    * close's role as the pendings' birth point — completion, absent,
-    * and quantified-tail forms all compose, m = 1 included. MEASURES ×
-    * absent and MEASURES × reluctant overlap stream since r14 too
-    * (frozen prefix-span accumulators + watermark verdicts; m-th-event
-    * serving), matching the batch rewrite's new anti-join-wrapped
-    * measures form (q_measure_absent) — and across the NON-overlap
-    * families too (r14 session 2: [[PatternMatch.detectMeasures]] and
-    * [[RunChainDetector.detectMeasures]] gained `absentPred` arms —
-    * parked prefixes with frozen spans, watermark verdicts), so
-    * MEASURES × absent streams on every chain family. The remaining
-    * batch-only forms, each rejected loudly with a pointer to
-    * [[CepSql.sql]]: overlap at a non-head boundary (OverlapRunSpec
-    * pins the counterexample);
-    * optional steps × quantifiers reject at PARSE for both engines;
-    * `{1,}?` outside the 2-step head or an overlap head; bounded lazy
-    * `{m,n}?` (rejected at parse). Measures × reluctant stream since
-    * r8 on NON-overlap chains (lazy completions fold POST — the m-th
-    * event is a span row, unlike a greedy closure).
+    * Alternation (`click|view`) and step conditions work in every form. Step
+    * conditions and measures read the converter schema's numeric columns;
+    * quantified chains also take `ts` in FIRST/LAST and class refs.
+    * Rejected loudly, with a pointer to [[CepSql.sql]]: overlap at a
+    * non-head boundary, `{1,}?` outside a 2-step head or an overlap head,
+    * and measure or condition columns outside the converter schema.
     *
-    * The source view must be a STREAMING view with the events-table
-    * converter schema `(event_id, ts, user_id, event_type, value)` and
-    * the pattern must partition by `user_id` (the convention every
-    * streaming detector keys on) — both violations fail loudly.
-    * `lateness` bounds state for the timer-driven forms. */
+    * The source view must be STREAMING with the events-table converter
+    * schema `(event_id, ts, user_id, event_type, value)`, and the pattern
+    * must partition by `user_id`. `lateness` is the watermark delay: the
+    * unquantified family reads one watermark applied here, the other
+    * detectors apply it themselves. Optional `spark.graft.cep.maxPendings`
+    * caps live anchors and pendings per key on the overlap family and fails
+    * the query, naming the cap, when a key exceeds it. */
   def submitPattern(spark: SparkSession, patternText: String, name: String,
       lateness: String = "0 seconds"): StreamingQuery = {
     val spec = CepSql.parsePattern(patternText)
@@ -192,19 +145,16 @@ object ContinuousQueries {
     // a named error, never a silent drop.
     val maxPendings: Option[Int] =
       spark.conf.getOption("spark.graft.cep.maxPendings").map(_.toInt)
-    import org.apache.spark.sql.functions.col
     implicit val enc = org.apache.spark.sql.Encoders.product[CepEvent]
     val src = src0.select(col("event_id").cast("long"), col("ts"),
       col("user_id").cast("long"), col("event_type"),
       col("value").cast("double")).as[CepEvent]
-    // `lateness` reaches every arm: the absence/run detectors apply the
-    // watermark themselves (a second upstream one would be a disallowed
-    // redefinition), while the sequence/chain detectors take it via an
-    // explicitly watermarked input — their state pruning reads the
-    // WATERMARK (not the per-batch max), so an out-of-order completion
-    // inside the bound still matches (SubmitSqlSpec pins it).
+    // `lateness` reaches every arm: the run/skip/overlap detectors apply
+    // the watermark themselves (a second upstream one would be a
+    // disallowed redefinition); the other arms read this one. Pruning
+    // reads the WATERMARK, not the per-batch max, so an out-of-order
+    // completion inside the bound still matches (SubmitSqlSpec pins it).
     lazy val srcWm = src.withWatermark("ts", lateness)
-    val classes = spec.steps.map(_.events.toSet)
     val quantifiedTail = spec.steps.tail.exists(_.minTimes.isDefined)
     // step conditions (r7 DEFINE-lite): streaming evaluates them on the
     // converter schema, so only the `value` column is available. Since
@@ -215,7 +165,6 @@ object ContinuousQueries {
     // same-class event outside its condition is invisible (the batch
     // `type AND cond` anti-join/mask predicate). PERMUTE steps carry no
     // conditions by grammar.
-    val hasCond = spec.steps.exists(_.cond.isDefined)
     def stepPred(st: CepSql.PatternStep): CepEvent => Boolean = {
       val cls = st.events.toSet
       st.cond match {
@@ -223,7 +172,7 @@ object ContinuousQueries {
         case Some(c) =>
           // any numeric converter column (r8 — was value-only); a
           // non-numeric column throws loudly at submit time
-          val get = PatternMatch.numColumn(c.col)
+          val get = ChainEngine.numColumn(c.col)
           val n = c.num.toDouble
           val cmp: Double => Boolean = c.op match {
             case "<"  => _ < n
@@ -341,65 +290,29 @@ object ContinuousQueries {
           spec.steps.map(s => (stepPred(s), s.minTimes)), spec.withinMs,
           spec.steps.map(_.maxTimes), spec.measures,
           spec.steps.map(_.reluctant))
-        // same alias + integral-cast discipline as the plain-chain
-        // measures arm (batch schema parity)
-        val intCols = Set("event_id", "user_id")
-        val mcols = spec.measures.zipWithIndex.map { case (m, i) =>
-          val c = col("vals").getItem(i)
-          val typed = m match {
-            case CepSql.SpanAgg("COUNT", _, _) => c.cast("long")
-            case CepSql.SpanAgg(fn, cc, _)
-                if fn != "AVG" &&
-                  intCols(cc.toLowerCase(java.util.Locale.ROOT)) =>
-              c.cast("long")
-            case CepSql.BoundRef(_, _, cc, _, _)
-                if intCols(cc.toLowerCase(java.util.Locale.ROOT)) =>
-              c.cast("long")
-            case CepSql.BoundRef(_, _, cc, _, _)
-                if cc.equalsIgnoreCase("ts") =>
-              // the slot carries exact event micros — back to TIMESTAMP
-              // for batch schema parity (run_start/run_end columns)
-              org.apache.spark.sql.functions
-                .timestamp_micros(c.cast("long"))
-            case _: CepSql.MatchNum => c.cast("long")
-            case CepSql.ClassRef(_, cc, _, _)
-                if intCols(cc.toLowerCase(java.util.Locale.ROOT)) =>
-              c.cast("long")
-            case CepSql.ClassRef(_, cc, _, _)
-                if cc.equalsIgnoreCase("ts") =>
-              org.apache.spark.sql.functions
-                .timestamp_micros(c.cast("long"))
-            case _ => c
-          }
-          typed.as(m.alias)
-        }
         det.toDF().select(
           (Seq(col("user_id"), col("step_vals"), col("step_ts"),
-            col("start_ts"), col("end_ts")) ++ mcols): _*)
+            col("start_ts"), col("end_ts")) ++ measureCols(spec.measures)): _*)
       } else if (spec.permute) {
-        // PERMUTE(a, b) (r7): union of the two directional CepSequence
-        // detectors, tagged with the anchor's event name — the exact
-        // streaming twin of the batch union-of-rank-1 rewrite.
-        // PERMUTE(a, b, c) (r10, was batch-only through r9): one
-        // tracker per anchor advances BOTH candidate orders over the
-        // shared window; arm 1 emits on completion, arm 2 holds until
-        // the window closes behind the watermark (listed-order
-        // preference — the consumed-island suppressor discipline).
-        // Replay ≡ batch pinned in SubmitSqlSpec; held-triple recovery
-        // in RecoverySpec.
+        // PERMUTE(a, b): union of the two directional 2-step chains,
+        // tagged with the anchor's event name — the batch union-of-rank-1
+        // rewrite. PERMUTE(a, b, c): one tracker per anchor advances both
+        // candidate orders over the shared window; arm 1 emits on
+        // completion, arm 2 holds until the window closes behind the
+        // watermark (listed-order preference). Replay ≡ batch pinned in
+        // SubmitSqlSpec; held-triple recovery in RecoverySpec.
         if (spec.steps.length == 3)
           Permute3Detector.detect(srcWm, spec.steps.map(_.event),
             spec.withinMs).toDF()
         else {
-          val Seq(ca, cb) = classes
-          def leg(firsts: Set[String], seconds: Set[String], ev: String) =
-            CepSequence.detect(srcWm, firsts, seconds, spec.withinMs).toDF()
-              .select(col("user_id"),
-                org.apache.spark.sql.functions.lit(ev).as("first_ev"),
-                col("sid").as("first_id"), col("pid").as("second_id"),
-                col("s_ts").as("first_ts"), col("p_ts").as("second_ts"))
-          leg(ca, cb, spec.steps.head.event)
-            .union(leg(cb, ca, spec.steps.last.event))
+          def leg(a: CepSql.PatternStep, b: CepSql.PatternStep) =
+            ChainEngine.detect(srcWm, Seq(stepPred(a), stepPred(b)),
+                spec.withinMs).toDF()
+              .select(col("user_id"), lit(a.event).as("first_ev"),
+                stepId(0).as("first_id"), stepId(1).as("second_id"),
+                col("start_ts").as("first_ts"), col("end_ts").as("second_ts"))
+          val Seq(a, b) = spec.steps
+          leg(a, b).union(leg(b, a))
         }
       } else if (spec.skipPast) {
         SkipDetector.detectWhere(src, spec.steps.map(stepPred),
@@ -573,93 +486,77 @@ object ContinuousQueries {
             spec.steps.map(s => (stepPred(s), s.minTimes)),
             spec.withinMs, spec.steps.map(_.maxTimes),
             spec.steps.map(_.reluctant)).toDF()
-      } else spec.steps.head.minTimes match {
-        case Some(mt) =>
-          // conditions (r8) ride predicate dispatch — see the
-          // quantified-chain arm; RunDetector applies the watermark
-          // itself (timer-driven absence verdicts)
-          val runs = RunDetector.detectWhere(src, stepPred(spec.steps.head),
-            mt, stepPred(spec.steps.last),
-            spec.withinMs, Some(lateness), spec.steps.head.maxTimes)
-          // completed runs for the THEN form; timed-out runs for THEN NOT
-          val wanted =
-            if (spec.absent) runs.filter(_.next_follow.isEmpty)
-            else runs.filter(_.next_follow.isDefined)
-          wanted.toDF()
-        case None if spec.measures.nonEmpty =>
-          // MEASURES (r7, list since r8): plain chains; span aggregates
-          // and class references read any NUMERIC converter column
-          // since r8 (value, event_id, user_id) — detectMeasures
-          // rejects the rest loudly at submit. The trailing-NOT form
-          // streams since r14: the positive prefix parks with frozen
-          // accumulators and verdicts at the watermark
-          // (PatternMatch.detectMeasures' absentPred arm — matches the
-          // batch anti-join-wrapped measures, q_measure_absent).
-          val det =
-            if (spec.absent)
-              PatternMatch.detectMeasures(srcWm,
-                spec.steps.init.map(stepPred), spec.withinMs,
-                spec.measures,
-                absentPred = Some(stepPred(spec.steps.last)))
-            else PatternMatch.detectMeasures(srcWm,
-              spec.steps.map(stepPred), spec.withinMs, spec.measures)
-          // project the vals vector onto the declared aliases, casting
-          // the integer-valued measures back to long so the streaming
-          // schema matches the batch rewrite's: COUNT, MATCH_NUMBER, and
-          // (r8) any non-AVG aggregate or class ref over an integral
-          // converter column (exact through the double carrier — ids and
-          // their span sums stay far below 2^53)
-          val intCols = Set("event_id", "user_id")
-          val mcols = spec.measures.zipWithIndex.map {
-            case (m, i) =>
-              val c = col("vals").getItem(i)
-              val typed = m match {
-                case CepSql.SpanAgg("COUNT", _, _) => c.cast("long")
-                case _: CepSql.MatchNum            => c.cast("long")
-                case CepSql.SpanAgg(fn, cc, _)
-                    if fn != "AVG" &&
-                      intCols(cc.toLowerCase(java.util.Locale.ROOT)) =>
-                  c.cast("long")
-                case CepSql.ClassRef(_, cc, _, _)
-                    if intCols(cc.toLowerCase(java.util.Locale.ROOT)) =>
-                  c.cast("long")
-                case _ => c
-              }
-              typed.as(m.alias)
-          }
-          det.toDF().select(
-            (Seq(col("user_id"), col("step_ids"), col("start_ts"),
-              col("end_ts")) ++ mcols): _*)
-        case None if spec.steps.length == 2 && spec.absent =>
-          AbsenceDetector.detectWhere(src, stepPred(spec.steps.head),
-            stepPred(spec.steps.last), spec.withinMs, lateness).toDF()
-        case None if spec.steps.length == 2 && !hasCond =>
-          CepSequence.detect(srcWm, classes.head, classes.last,
-            spec.withinMs).toDF()
-        case None if spec.absent =>
-          // optional mid-prefix steps (r8, previously rejected): the
-          // composite-pivot decision streams per event, so the same
-          // arm serves both — the plain form keeps its Seq[Long] schema
-          if (spec.steps.exists(_.optional))
-            ChainAbsenceDetector.detectOptWhere(src,
-              spec.steps.map(stepPred), spec.steps.map(_.optional),
-              spec.withinMs, lateness).toDF()
+      } else if (spec.steps.head.minTimes.isDefined) {
+        // conditions ride predicate dispatch — see the quantified-chain
+        // arm; RunDetector applies the watermark itself (timer-driven
+        // absence verdicts)
+        val runs = RunDetector.detectWhere(src, stepPred(spec.steps.head),
+          spec.steps.head.minTimes.get, stepPred(spec.steps.last),
+          spec.withinMs, Some(lateness), spec.steps.head.maxTimes)
+        // completed runs for the THEN form; timed-out runs for THEN NOT
+        val wanted =
+          if (spec.absent) runs.filter(_.next_follow.isEmpty)
+          else runs.filter(_.next_follow.isDefined)
+        wanted.toDF()
+      } else {
+        // the unquantified family: one engine, one output row, projected
+        // onto each form's columns (see the table above)
+        val pos = spec.steps.filterNot(_.negated)
+        val optional = pos.exists(_.optional)
+        val det = ChainEngine.detect(srcWm, pos.map(stepPred), spec.withinMs,
+          pos.map(_.optional), spec.steps.find(_.negated).map(stepPred),
+          spec.measures).toDF()
+        val plain = spec.measures.isEmpty
+        det.select((
+          if (optional)
+            Seq(col("user_id"), col("step_ids"), col("step_ts"),
+              col("start_ts"), col("end_ts"))
+          else if (plain && pos.length == 1)
+            Seq(col("user_id"), stepId(0).as("sid"),
+              col("start_ts").as("s_ts"))
+          else if (plain && pos.length == 2 && !spec.absent &&
+              spec.steps.forall(_.cond.isEmpty))
+            Seq(col("user_id"), stepId(0).as("sid"), stepId(1).as("pid"),
+              col("start_ts").as("s_ts"), col("end_ts").as("p_ts"))
           else
-            ChainAbsenceDetector.detectWhere(src, spec.steps.map(stepPred),
-              spec.withinMs, lateness).toDF()
-        case None if spec.steps.exists(_.optional) =>
-          // optional-step chains (r7): per-event skip decision, so the
-          // same predicate dispatch streams them (value-col conditions
-          // included, like plain chains)
-          PatternMatch.detectOpt(srcWm, spec.steps.map(stepPred),
-            spec.steps.map(_.optional), spec.withinMs).toDF()
-        case None =>
-          // plain chains (incl. conditioned 2-step, r7): predicate
-          // dispatch — PatternMatch is CepSequence for 2 steps
-          PatternMatch.detectWhere(srcWm, spec.steps.map(stepPred),
-            spec.withinMs).toDF()
+            Seq(col("user_id"), stepIds.as("step_ids"), col("start_ts"),
+              col("end_ts")) ++ measureCols(spec.measures)): _*)
       }
     submitMemory(out, name, "append")
+  }
+
+  /** [[ChainEngine]]'s id slots are null only for a skipped optional
+    * step; without optional steps the projections keep the non-null
+    * `bigint` ids the typed match rows have always had. */
+  private def stepId(i: Int): Column = coalesce(col("step_ids")(i), lit(0L))
+  private def stepIds: Column =
+    transform(col("step_ids"), x => coalesce(x, lit(0L)))
+
+  /** MEASURES columns from a `vals` vector, named by alias, with the batch
+    * rewrite's types: COUNT, MATCH_NUMBER and non-AVG aggregates or refs
+    * over an integral column back to long (exact through the double
+    * carrier — ids and their span sums stay far below 2^53), `ts` refs
+    * (exact micros) back to TIMESTAMP. */
+  private def measureCols(measures: Seq[CepSql.Measure]): Seq[Column] = {
+    val intCols = Set("event_id", "user_id")
+    def integral(c: String) = intCols(c.toLowerCase(java.util.Locale.ROOT))
+    measures.zipWithIndex.map { case (m, i) =>
+      val c = col("vals").getItem(i)
+      val typed = m match {
+        case CepSql.SpanAgg("COUNT", _, _) | CepSql.MatchNum(_) =>
+          c.cast("long")
+        case CepSql.SpanAgg(fn, cc, _) if fn != "AVG" && integral(cc) =>
+          c.cast("long")
+        case CepSql.BoundRef(_, _, cc, _, _) if integral(cc) => c.cast("long")
+        case CepSql.ClassRef(_, cc, _, _) if integral(cc) => c.cast("long")
+        case CepSql.BoundRef(_, _, cc, _, _) if cc.equalsIgnoreCase("ts") =>
+          timestamp_micros(c.cast("long"))
+        case CepSql.ClassRef(_, cc, _, _) if cc.equalsIgnoreCase("ts") =>
+          timestamp_micros(c.cast("long"))
+        case _ => c
+      }
+      typed.as(m.alias)
+    }
   }
 
   def list(spark: SparkSession): Seq[StreamingQuery] =

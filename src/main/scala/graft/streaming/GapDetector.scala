@@ -22,8 +22,8 @@ case class LastEvent(ts: Timestamp, id: Long)
   * State per key is ONE (ts, id) row — O(keys), not O(stream). A
   * cross-batch late event (older than the retained newest) is ignored by
   * the monotonic rule, matching what a watermark would have done to it
-  * upstream. Unlike [[AbsenceDetector]] (which needs timers to prove a
-  * non-arrival), a gap is closed BY an arrival, so no timeout machinery
+  * upstream. Unlike [[ChainEngine]]'s absence forms (which need timers to
+  * prove a non-arrival), a gap is closed BY an arrival, so no timeout machinery
   * is required — silence that never ends is never reported (batch
   * agrees: lead() is NULL on the last event).
   */

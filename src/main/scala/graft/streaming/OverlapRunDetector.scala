@@ -751,14 +751,14 @@ object OverlapRunDetector {
       case CepSql.SpanAgg(fn, c, _) =>
         require(Set("SUM", "AVG", "MIN", "MAX", "COUNT")(fn),
           s"unsupported measure fn '$fn'")
-        if (c != "*") PatternMatch.numColumn(c) // loud on non-numeric
+        if (c != "*") ChainEngine.numColumn(c) // loud on non-numeric
       case CepSql.BoundRef(fn, _, c, st, _) =>
         require(Set("FIRST", "LAST")(fn), s"unsupported boundary fn '$fn'")
         require(st == 2 || quantStep(st),
           "overlap-form FIRST/LAST boundary refs read a quantified " +
             "step (the head run, step 2, or a quantified tail step — " +
             "r13)")
-        if (!c.equalsIgnoreCase("ts")) PatternMatch.numColumn(c)
+        if (!c.equalsIgnoreCase("ts")) ChainEngine.numColumn(c)
       case CepSql.ClassRef(_, c, st, _) =>
         require(st == 1 ||
             (st >= 3 &&
@@ -768,7 +768,7 @@ object OverlapRunDetector {
             "unquantified POSITIVE tail step (step >= 3, r13); refs " +
             "to a quantified tail step desugar to FIRST/LAST, and the " +
             "NOT step never matches a row")
-        if (!c.equalsIgnoreCase("ts")) PatternMatch.numColumn(c)
+        if (!c.equalsIgnoreCase("ts")) ChainEngine.numColumn(c)
       case _: CepSql.MatchNum => () // held-release numbering (r13 s2)
       case m => throw new IllegalArgumentException(
         "overlap-form measures support span aggregates, FIRST/LAST, " +
@@ -786,16 +786,16 @@ object OverlapRunDetector {
       case CepSql.SpanAgg(fn, c, _) if fn != "COUNT" && c != "*" =>
         c.toLowerCase(java.util.Locale.ROOT)
     }.distinct
-    val aggSels = aggCols.map(PatternMatch.numColumn)
+    val aggSels = aggCols.map(ChainEngine.numColumn)
     val slotGet: Seq[Option[CepEvent => Double]] = measures.map {
       case b: CepSql.BoundRef =>
         Some(if (b.col.equalsIgnoreCase("ts"))
           (e: CepEvent) => us(e.ts).toDouble
-        else PatternMatch.numColumn(b.col))
+        else ChainEngine.numColumn(b.col))
       case cr: CepSql.ClassRef =>
         Some(if (cr.col.equalsIgnoreCase("ts"))
           (e: CepEvent) => us(e.ts).toDouble
-        else PatternMatch.numColumn(cr.col))
+        else ChainEngine.numColumn(cr.col))
       case _ => None
     }
     val withinUs = withinMs * 1000L

@@ -29,8 +29,7 @@ case class RunChainPending(vals: List[Long], tss: List[Timestamp],
 /** `pending`/`cancels` are used by the absent mode only (empty lists
   * otherwise): completed prefixes held for the watermark verdict, and
   * completion-class events retained for late-completing prefixes
-  * (pruned to the lateness horizon, [[ChainAbsenceDetector]]'s
-  * discipline). */
+  * (pruned to the lateness horizon, [[ChainEngine]]'s discipline). */
 case class RunChainState(partials: List[RunChainPartial],
     pending: List[RunChainPending] = Nil,
     cancels: List[Timestamp] = Nil)
@@ -74,7 +73,7 @@ case class RunChainMState(partials: List[RunChainMPartial],
   *
   *  - an unquantified step takes the FIRST event of its class strictly
   *    after the previous step's time, inside `anchor + within`
-  *    ([[PatternMatch]] rules; a quantified FIRST step anchors at its
+  *    ([[ChainEngine]] rules; a quantified FIRST step anchors at its
   *    run's END, consistent with the batch window anchoring);
   *  - a quantified step takes the FIRST MAXIMAL run of ≥ m consecutive
   *    class events whose start is strictly after the previous step and
@@ -138,7 +137,7 @@ object RunChainDetector {
     * rewrite's anti join after the quantified rank-1 prefix.
     *
     * Composes the quantified-prefix machinery above with
-    * [[ChainAbsenceDetector]]'s verdict discipline: a completed prefix
+    * [[ChainEngine]]'s verdict discipline: a completed prefix
     * is held PENDING; a condition-satisfying completion cancels it; the
     * verdict "nothing arrived" is only provable by the WATERMARK
     * crossing `ts_1 + within`, so emission is timer-driven
@@ -181,7 +180,7 @@ object RunChainDetector {
       "one maxTimes entry per step (None = uncapped)")
     require(steps.length >= 2, "a pattern needs at least 2 steps")
     require(steps.exists(_._2.isDefined),
-      "no quantifier — use PatternMatch/CepSequence for plain chains")
+      "no quantifier — use ChainEngine for plain chains")
     val n = steps.length
     val withinUs = withinMs * 1000L
     implicit val matchEnc = Encoders.product[RunChainMatch]
@@ -358,7 +357,7 @@ object RunChainDetector {
                 case None =>
                   // plain head: the event itself is step 1. Anchor only
                   // if no identical partial exists (each head event is
-                  // its own anchor, PatternMatch-style).
+                  // its own anchor, as in ChainEngine).
                   advance(anchored.copy(prevTs =
                     new Timestamp(0L)), e.event_id, e.ts)
                     .foreach(p2 => partials = p2 :: partials)
@@ -404,7 +403,7 @@ object RunChainDetector {
           // piggybacked on an input batch). Inclusive <=: Spark drops
           // stateful late rows at ts <= watermark, so once wm >=
           // ts_1+within no admissible canceller can still arrive (see
-          // ChainAbsenceDetector's boundary note).
+          // ChainEngine's scaladoc).
           absentP.foreach { _ =>
             val wmUs = wmMs * 1000L
             val (due, keep) = pending.partition(p =>
@@ -444,7 +443,7 @@ object RunChainDetector {
     * and (LAST) refreshed per run event, so a failed run's stale slots
     * are always overwritten by the accepted run; a ts boundary rides
     * the slot as exact event micros and casts back to TIMESTAMP at
-    * emission. MATCH_NUMBER streams since r9 via PatternMatch's
+    * emission. MATCH_NUMBER streams since r9 via ChainEngine's
     * held-release discipline — a completed match takes its number only
     * once the watermark closes its window and no open partial could
     * still complete into an earlier-ordered match, ordered by
@@ -456,7 +455,7 @@ object RunChainDetector {
     * on in-order replay (RunChainSpec law); out-of-order span events
     * inside the lateness bound still advance STEPS but cannot
     * retro-enter an already-accumulated span — batch is authoritative
-    * there ([[PatternMatch.detectMeasure]]'s documented contract). */
+    * there. */
   /** `absentPred` (r14): the trailing NOT step's predicate — `steps`
     * then lists only the POSITIVE prefix. A partial completing the
     * prefix parks (its span froze at the last positive match — parked
@@ -496,13 +495,13 @@ object RunChainDetector {
     require(steps.length >= 2 || (absent && steps.nonEmpty),
       "a pattern needs at least 2 steps")
     require(steps.exists(_._2.isDefined),
-      "no quantifier — use PatternMatch.detectMeasures for plain chains")
+      "no quantifier — use ChainEngine for plain chains")
     require(measures.nonEmpty, "at least one measure")
     measures.foreach {
       case CepSql.SpanAgg(fn, c, _) =>
         require(Set("SUM", "AVG", "MIN", "MAX", "COUNT")(fn),
           s"unsupported measure fn '$fn'")
-        if (c != "*") PatternMatch.numColumn(c) // loud on non-numeric
+        if (c != "*") ChainEngine.numColumn(c) // loud on non-numeric
       case CepSql.BoundRef(fn, _, c, st, _) =>
         // boundary refs (r8; ts since r9): the partial carries the
         // referenced run's boundary VALUES, one slot per measure. A ts
@@ -514,7 +513,7 @@ object RunChainDetector {
         require(st >= 1 && st <= steps.length && steps(st - 1)._2.isDefined,
           s"FIRST/LAST reference step $st, which is not quantified")
         if (!c.equalsIgnoreCase("ts"))
-          PatternMatch.numColumn(c) // loud on non-numeric
+          ChainEngine.numColumn(c) // loud on non-numeric
       case _: CepSql.MatchNum => () // streams since r9 (held-release)
       case CepSql.ClassRef(_, c, st, _) =>
         // class refs on UNQUANTIFIED steps stream since r9: the matched
@@ -525,7 +524,7 @@ object RunChainDetector {
         require(st >= 1 && st <= steps.length && steps(st - 1)._2.isEmpty,
           s"class ref step $st must be unquantified (runs desugar to " +
             "FIRST/LAST)")
-        if (!c.equalsIgnoreCase("ts")) PatternMatch.numColumn(c)
+        if (!c.equalsIgnoreCase("ts")) ChainEngine.numColumn(c)
       case m => throw new IllegalArgumentException(
         s"streaming quantified-chain measures support span aggregates, " +
           s"class refs, FIRST/LAST boundary refs, and MATCH_NUMBER — " +
@@ -536,10 +535,10 @@ object RunChainDetector {
         case (cr: CepSql.ClassRef, j) =>
           val get: CepEvent => Double =
             if (cr.col.equalsIgnoreCase("ts")) e => us(e.ts).toDouble
-            else PatternMatch.numColumn(cr.col)
+            else ChainEngine.numColumn(cr.col)
           (cr, j, get)
       }
-    // MATCH_NUMBER (r9): PatternMatch.detectMeasures' held-release
+    // MATCH_NUMBER (r9): ChainEngine's held-release
     // discipline — a completed match takes its number only once the
     // watermark closes its window and no open partial could still
     // complete into an earlier-ordered match. Ordering key =
@@ -554,7 +553,7 @@ object RunChainDetector {
         case (b: CepSql.BoundRef, j) =>
           val get: CepEvent => Double =
             if (b.col.equalsIgnoreCase("ts")) e => us(e.ts).toDouble
-            else PatternMatch.numColumn(b.col)
+            else ChainEngine.numColumn(b.col)
           (b, j, get)
       }
     val bndZero: Seq[Double] = measures.map(_ => 0.0)
@@ -562,7 +561,7 @@ object RunChainDetector {
       case CepSql.SpanAgg(fn, c, _) if fn != "COUNT" && c != "*" =>
         c.toLowerCase(java.util.Locale.ROOT)
     }.distinct
-    val aggSels = aggCols.map(PatternMatch.numColumn)
+    val aggSels = aggCols.map(ChainEngine.numColumn)
     val zero = aggCols.map(_ => 0.0)
     val n = steps.length
     val withinUs = withinMs * 1000L
@@ -850,7 +849,7 @@ object RunChainDetector {
             }
           }
           if (hasNum) {
-            // numbered release (r9, PatternMatch's discipline): a done
+            // numbered release (r9, ChainEngine's discipline): a done
             // match takes its number once its window closed behind the
             // watermark AND no open partial could still complete into
             // an earlier-ordered match. Each open partial's EVENTUAL

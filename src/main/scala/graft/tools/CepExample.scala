@@ -42,13 +42,15 @@ object CepExample {
          FROM live_events OVER (WINDOW '3600' SECONDS)
          GROUP BY event_type""",
       "hourly_by_type")
-    CepSequence.detect(stream.toDS(), "signup", "purchase", 30 * 60 * 1000L)
-      .writeStream.queryName("conversions").format("memory")
-      .outputMode("append").start()
-    AbsenceDetector.detect(stream.toDS(), "signup", "purchase",
-        30 * 60 * 1000L, "0 seconds")
-      .writeStream.queryName("abandonments").format("memory")
-      .outputMode("append").start()
+    // CEP pattern TEXT on the live stream: a sequence and an absence
+    ContinuousQueries.submitPattern(spark,
+      """SELECT * FROM live_events
+         MATCH PATTERN (signup THEN purchase WITHIN '30' MINUTES)
+         PARTITION BY user_id""", "conversions")
+    ContinuousQueries.submitPattern(spark,
+      """SELECT * FROM live_events
+         MATCH PATTERN (signup THEN NOT purchase WITHIN '30' MINUTES)
+         PARTITION BY user_id""", "abandonments")
 
     println("active: " + ContinuousQueries.list(spark).map(_.name)
       .sorted.mkString(", "))
@@ -64,6 +66,8 @@ object CepExample {
 
     println(s"hourly windows: ${spark.table("hourly_by_type").count()}")
     println(s"signup→purchase conversions: ${spark.table("conversions").count()}")
+    println(s"signups without a purchase (so far): " +
+      s"${spark.table("abandonments").count()}")
     spark.table("conversions").orderBy("s_ts").show(5, truncate = false)
 
     // 4. runtime management: cancel one query, the others keep running
@@ -74,7 +78,7 @@ object CepExample {
 
     // 5. the same pattern as SQL TEXT (r6 dialect) over the full batch
     //    history — the injected parser rewrites MATCH PATTERN before
-    //    Spark's parser sees it; results equal the streaming detector's
+    //    Spark's parser sees it; results equal the streaming query's
     //    full-replay output
     Tables.load(spark, sf)
     val patSql = spark.sql(

@@ -5,13 +5,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Tables
 import graft.streaming._
 
-/** Dev probe (r7): replay throughput of the five new CEP detectors —
-  * SkipDetector (greedy non-overlap), RunChainDetector (quantified
-  * chains), ChainAbsenceDetector (absence after a prefix),
-  * PatternMatch.detectOpt (optional steps), PatternMatch.detectMeasure
-  * (span aggregates) — same method as StreamThroughputProbe: one warm
-  * micro-batch, then the timed remainder of the sf0.1 events replay.
-  * Numbers land in VERIFICATION.md. */
+/** Dev probe: replay throughput of the quantified and skip-past CEP
+  * detectors — SkipDetector (greedy non-overlap) and RunChainDetector's
+  * chain, measure, lazy and numbered modes — same method as
+  * StreamThroughputProbe: one warm micro-batch, then the timed remainder
+  * of the sf0.1 events replay. Numbers land in VERIFICATION.md. The
+  * unquantified chains (ChainEngine) are measured by perfbench's
+  * `detectors.*` layer instead. */
 object DetectorThroughputProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -52,18 +52,6 @@ object DetectorThroughputProbe {
     run("runchain", ds => RunChainDetector.detect(ds,
       Seq((Set("signup"), None), (Set("click"), Some(2)),
         (Set("purchase"), None)), 24L * 3600 * 1000).toDF())
-    run("chainabs", ds => ChainAbsenceDetector.detect(ds,
-      Seq(Set("signup"), Set("click"), Set("purchase")),
-      24L * 3600 * 1000, "0 seconds").toDF())
-    run("optchain", ds => PatternMatch.detectOpt(ds,
-      Seq((e: CepEvent) => e.event_type == "signup",
-        (e: CepEvent) => e.event_type == "click",
-        (e: CepEvent) => e.event_type == "purchase"),
-      Seq(false, true, false), 12L * 3600 * 1000).toDF())
-    run("measure", ds => PatternMatch.detectMeasure(ds,
-      Seq((e: CepEvent) => e.event_type == "signup",
-        (e: CepEvent) => e.event_type == "purchase"),
-      30L * 60 * 1000, "SUM").toDF())
     // r8 detectors
     run("qmeasure", ds => RunChainDetector.detectMeasures(ds,
       Seq(((e: CepEvent) => e.event_type == "click", Some(2)),
@@ -84,11 +72,6 @@ object DetectorThroughputProbe {
       Seq(graft.streaming.CepSql.SpanAgg("SUM", "value", "sv"),
         graft.streaming.CepSql.SpanAgg("COUNT", "*", "cn")),
       Seq(true, false)).toDF())
-    run("optabs", ds => ChainAbsenceDetector.detectOptWhere(ds,
-      Seq("signup", "click", "view", "purchase")
-        .map(t => (e: CepEvent) => e.event_type == t),
-      Seq(false, true, false, false), 12L * 3600 * 1000,
-      "0 seconds").toDF())
     // r9 modes: numbered release, ts boundary slots, class-ref capture
     run("qmeasnum", ds => RunChainDetector.detectMeasures(
       ds.withWatermark("ts", "0 seconds").as[CepEvent],

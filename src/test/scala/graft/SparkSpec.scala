@@ -14,7 +14,7 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .appName("graft-tests")
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    s.sparkContext.setLogLevel("ERROR")
     s
   }
   val sf: String = "/root/testdata/sf0.001"

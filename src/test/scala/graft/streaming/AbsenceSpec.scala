@@ -3,10 +3,15 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 
 import graft.{SparkSpec, Tables}
 
 class AbsenceSpec extends SparkSpec {
+  /** The 2-step absence columns `(user_id, sid, s_ts)` of an engine row. */
+  private val absenceCols =
+    Seq(col("user_id"), col("step_ids")(0).as("sid"),
+      col("start_ts").as("s_ts"))
 
   test("streaming absence detection == batch q_cep_absence (flushed set)") {
     val s2 = spark.newSession()
@@ -15,8 +20,9 @@ class AbsenceSpec extends SparkSpec {
     import s2.implicits._
     val stream = MemoryStream[CepEvent]
     val name = "absence"
-    val q = AbsenceDetector.detect(stream.toDS(), "signup", "purchase",
-        30L * 60 * 1000, "0 seconds")
+    val q = ChainEngine.detect(stream.toDS().withWatermark("ts", "0 seconds"),
+        Steps.of("signup"), 30L * 60 * 1000,
+        absent = Some(_.event_type == "purchase"))
       .writeStream.queryName(name).format("memory").outputMode("append")
       .start()
     val data = Tables.table(spark, sf, "events")
@@ -36,7 +42,7 @@ class AbsenceSpec extends SparkSpec {
       -1L, "flush", 0.0))
     q.processAllAvailable()
     q.stop()
-    val got = s2.table(name).select("user_id", "sid", "s_ts")
+    val got = s2.table(name).select(absenceCols: _*)
       .collect().map(_.toSeq).toSet
     val want = graft.SparkEntry.queries("q_cep_absence")(spark, sf)
       .select("user_id", "sid", "s_ts")
@@ -54,10 +60,9 @@ class AbsenceSpec extends SparkSpec {
     import s2.implicits._
     val stream = MemoryStream[CepEvent]
     val name = "absence_cond"
-    val q = AbsenceDetector.detectWhere(stream.toDS(),
-        e => e.event_type == "signup",
-        e => e.event_type == "purchase" && e.value > 50,
-        30L * 60 * 1000, "0 seconds")
+    val q = ChainEngine.detect(stream.toDS().withWatermark("ts", "0 seconds"),
+        Steps.of("signup"), 30L * 60 * 1000,
+        absent = Some(e => e.event_type == "purchase" && e.value > 50))
       .writeStream.queryName(name).format("memory").outputMode("append")
       .start()
     val data = Tables.table(spark, sf, "events")
@@ -74,7 +79,7 @@ class AbsenceSpec extends SparkSpec {
       -1L, "flush", 0.0))
     q.processAllAvailable()
     q.stop()
-    val got = s2.table(name).select("user_id", "sid", "s_ts")
+    val got = s2.table(name).select(absenceCols: _*)
       .collect().map(_.toSeq).toSet
     Tables.load(spark, sf)
     val wantDf = CepSql.sql(spark,
@@ -99,8 +104,9 @@ class AbsenceSpec extends SparkSpec {
     val name = "absence_late"
     def ev(id: Long, u: Long, t: String, typ: String) =
       CepEvent(id, Timestamp.valueOf(t), u, typ, 1.0)
-    val q = AbsenceDetector.detect(stream.toDS(), "signup", "purchase",
-        30L * 60 * 1000, "1 hour")
+    val q = ChainEngine.detect(stream.toDS().withWatermark("ts", "1 hour"),
+        Steps.of("signup"), 30L * 60 * 1000,
+        absent = Some(_.event_type == "purchase"))
       .writeStream.queryName(name).format("memory").outputMode("append")
       .start()
     // batch 1: the purchase is processed BEFORE its (late) signup exists
@@ -119,7 +125,7 @@ class AbsenceSpec extends SparkSpec {
     stream.addData(ev(91, 9L, "2024-01-01 14:00:01", "view"))
     q.processAllAvailable()
     q.stop()
-    val got = s2.table(name).select("user_id", "sid")
+    val got = s2.table(name).select(absenceCols.take(2): _*)
       .as[(Long, Long)].collect().toSet
     assert(got === Set((8L, 3L)),
       s"only the un-cancelled signup may surface as an absence: $got")

@@ -35,9 +35,9 @@ class ChainAbsenceSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
     val name = s"chain_abs_${System.nanoTime}"
-    val q = ChainAbsenceDetector.detect(stream.toDS(),
-        Seq(Set("signup"), Set("click"), Set("purchase")),
-        24L * 3600 * 1000, "0 seconds")
+    val q = ChainEngine.detect(stream.toDS().withWatermark("ts", "0 seconds"),
+        Steps.of("signup", "click"), 24L * 3600 * 1000,
+        absent = Some(_.event_type == "purchase"))
       .writeStream.queryName(name).format("memory").outputMode("append")
       .start()
     val data = eventsDs.orderBy("ts", "event_id").collect()
@@ -56,7 +56,7 @@ class ChainAbsenceSpec extends SparkSpec {
       .map { r =>
         val ids = r.getSeq[Long](1)
         (r.getLong(0), ids.head, ids(1),
-          us(r.getTimestamp(2)), us(r.getTimestamp(3)))
+          us(r.getAs[Timestamp]("start_ts")), us(r.getAs[Timestamp]("end_ts")))
       }.toSet
     assert(streamed === batch)
   }
@@ -88,11 +88,11 @@ class ChainAbsenceSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
     val name = s"chain_abs_cond_${System.nanoTime}"
-    val q = ChainAbsenceDetector.detectWhere(stream.toDS(),
+    val q = ChainEngine.detect(stream.toDS().withWatermark("ts", "0 seconds"),
         Seq((e: CepEvent) => e.event_type == "signup",
-          (e: CepEvent) => e.event_type == "click" && e.value > 20,
-          (e: CepEvent) => e.event_type == "purchase" && e.value > 50),
-        24L * 3600 * 1000, "0 seconds")
+          (e: CepEvent) => e.event_type == "click" && e.value > 20),
+        24L * 3600 * 1000,
+        absent = Some(e => e.event_type == "purchase" && e.value > 50))
       .writeStream.queryName(name).format("memory").outputMode("append")
       .start()
     val data = eventsDs.orderBy("ts", "event_id").collect()
@@ -110,7 +110,7 @@ class ChainAbsenceSpec extends SparkSpec {
       .map { r =>
         val ids = r.getSeq[Long](1)
         (r.getLong(0), ids.head, ids(1),
-          us(r.getTimestamp(2)), us(r.getTimestamp(3)))
+          us(r.getAs[Timestamp]("start_ts")), us(r.getAs[Timestamp]("end_ts")))
       }.toSet
     assert(streamed === batch)
   }
@@ -118,7 +118,7 @@ class ChainAbsenceSpec extends SparkSpec {
   test("optional mid-prefix replay == batch composite-pivot absence " +
     "(r8)") {
     // signup THEN click? THEN view THEN NOT purchase: the per-event
-    // skip decision (detectOpt rules) inside the absence prefix must
+    // skip decision (the optional-chain rules) inside the absence prefix must
     // reproduce the batch composite-pivot + anti-join rewrite on the
     // full fixture — ids including the None slot, ts vector, both arms.
     Tables.load(spark, sf)
@@ -141,11 +141,9 @@ class ChainAbsenceSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
     val name = s"chain_abs_opt_${System.nanoTime}"
-    val q = ChainAbsenceDetector.detectOptWhere(stream.toDS(),
-        Seq("signup", "click", "view", "purchase")
-          .map(t => (e: CepEvent) => e.event_type == t),
-        Seq(false, true, false, false),
-        12L * 3600 * 1000, "0 seconds")
+    val q = ChainEngine.detect(stream.toDS().withWatermark("ts", "0 seconds"),
+        Steps.of("signup", "click", "view"), 12L * 3600 * 1000,
+        Seq(false, true, false), absent = Some(_.event_type == "purchase"))
       .writeStream.queryName(name).format("memory").outputMode("append")
       .start()
     val data = eventsDs.orderBy("ts", "event_id").collect()
@@ -194,13 +192,12 @@ class ChainAbsenceSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
     val name = s"chain_abs_copt_${System.nanoTime}"
-    val q = ChainAbsenceDetector.detectOptWhere(stream.toDS(),
+    val q = ChainEngine.detect(stream.toDS().withWatermark("ts", "0 seconds"),
         Seq((e: CepEvent) => e.event_type == "signup",
           (e: CepEvent) => e.event_type == "click" && e.value > 40,
-          (e: CepEvent) => e.event_type == "view",
-          (e: CepEvent) => e.event_type == "purchase" && e.value > 50),
-        Seq(false, true, false, false),
-        12L * 3600 * 1000, "0 seconds")
+          (e: CepEvent) => e.event_type == "view"),
+        12L * 3600 * 1000, Seq(false, true, false),
+        absent = Some(e => e.event_type == "purchase" && e.value > 50))
       .writeStream.queryName(name).format("memory").outputMode("append")
       .start()
     val data = eventsDs.orderBy("ts", "event_id").collect()

@@ -17,13 +17,13 @@ class LateDataSpec extends SparkSpec {
   private def ev(id: Long, u: Long, t: String, typ: String) =
     CepEvent(id, Timestamp.valueOf(t), u, typ, 1.0)
 
-  test("CepSequence: late second still matches (watermark prune horizon)") {
+  test("2-step chain: late second still matches (watermark prune horizon)") {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
     val name = "late_seq"
-    val q = CepSequence.detect(
+    val q = ChainEngine.detect(
         stream.toDS().withWatermark("ts", "1 hour"),
-        "signup", "purchase", 30L * 60 * 1000)
+        Steps.of("signup", "purchase"), 30L * 60 * 1000)
       .writeStream.queryName(name).format("memory").outputMode("append")
       .start()
     // batch 1: the first, plus in-window noise — a batch-max prune would
@@ -36,7 +36,8 @@ class LateDataSpec extends SparkSpec {
     stream.addData(ev(3, 7L, "2024-01-01 10:20:00", "purchase"))
     q.processAllAvailable()
     q.stop()
-    val got = spark.table(name).select("sid", "pid").as[(Long, Long)]
+    val got = spark.table(name)
+      .select($"step_ids"(0), $"step_ids"(1)).as[(Long, Long)]
       .collect().toSet
     assert(got === Set((1L, 3L)),
       s"late purchase inside lateness must match the open signup: $got")

@@ -23,10 +23,9 @@ class MeasureChainSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
     val name = s"measure_${fn}_${System.nanoTime}"
-    val q = PatternMatch.detectMeasure(stream.toDS(),
-      Seq((e: CepEvent) => e.event_type == "signup",
-        (e: CepEvent) => e.event_type == "purchase"),
-      12L * 3600 * 1000, fn)
+    val q = ChainEngine.detect(stream.toDS(), Steps.of("signup", "purchase"),
+      12L * 3600 * 1000, measures = Seq(CepSql.SpanAgg(fn,
+        if (fn == "COUNT") "*" else "value", "measure")))
       .writeStream.queryName(name).format("memory").outputMode("append")
       .start()
     val data = eventsDs.orderBy("ts", "event_id").collect()
@@ -36,7 +35,7 @@ class MeasureChainSpec extends SparkSpec {
     }
     q.stop()
     val rows = spark.table(name).collect()
-      .map(r => r.getSeq[Long](1) -> r.getDouble(4))
+      .map(r => r.getSeq[Long](1) -> r.getSeq[Double](5).head)
     val m = rows.toMap
     assert(rows.length === m.size,
       "duplicate emissions must not hide behind the map collapse")
@@ -96,11 +95,10 @@ class MeasureChainSpec extends SparkSpec {
       CepSql.ClassRef("signup", "value", 1, "s_v"),
       CepSql.ClassRef("purchase", "value", 2, "p_v"),
       CepSql.MatchNum("mno"))
-    val q = PatternMatch.detectMeasures(
+    val q = ChainEngine.detect(
         stream.toDS().withWatermark("ts", "0 seconds"),
-        Seq((e: CepEvent) => e.event_type == "signup",
-          (e: CepEvent) => e.event_type == "purchase"),
-        12L * 3600 * 1000, measures)
+        Steps.of("signup", "purchase"), 12L * 3600 * 1000,
+        measures = measures)
       .writeStream.queryName(name).format("memory").outputMode("append")
       .start()
     val data = eventsDs.orderBy("ts", "event_id").collect()
@@ -116,7 +114,7 @@ class MeasureChainSpec extends SparkSpec {
     q.stop()
     val got = spark.table(name).filter(col("user_id") =!= -1L).collect()
       .map { r =>
-        val v = r.getSeq[Double](4)
+        val v = r.getSeq[Double](5)
         r.getSeq[Long](1) -> ((v(0).toLong, v(1), v(2), v(3).toLong))
       }.toMap
     assert(got === want)
@@ -147,10 +145,8 @@ class MeasureChainSpec extends SparkSpec {
       CepSql.SpanAgg("MAX", "event_id", "mxe"),
       CepSql.SpanAgg("MIN", "value", "mnv"),
       CepSql.ClassRef("signup", "event_id", 1, "s_id"))
-    val q = PatternMatch.detectMeasures(stream.toDS(),
-        Seq((e: CepEvent) => e.event_type == "signup",
-          (e: CepEvent) => e.event_type == "purchase"),
-        12L * 3600 * 1000, measures)
+    val q = ChainEngine.detect(stream.toDS(), Steps.of("signup", "purchase"),
+        12L * 3600 * 1000, measures = measures)
       .writeStream.queryName(name).format("memory").outputMode("append")
       .start()
     val data = eventsDs.orderBy("ts", "event_id").collect()
@@ -160,7 +156,7 @@ class MeasureChainSpec extends SparkSpec {
     }
     q.stop()
     val got = spark.table(name).collect().map { r =>
-      val v = r.getSeq[Double](4)
+      val v = r.getSeq[Double](5)
       r.getSeq[Long](1) -> ((v(0).toLong, v(1).toLong, v(2), v(3).toLong))
     }.toMap
     assert(got === want)
@@ -723,10 +719,8 @@ class MeasureChainSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
     val e = intercept[IllegalArgumentException] {
-      PatternMatch.detectMeasures(stream.toDS(),
-        Seq((e: CepEvent) => e.event_type == "a",
-          (e: CepEvent) => e.event_type == "b"),
-        1000L, Seq(CepSql.SpanAgg("SUM", "props", "p")))
+      ChainEngine.detect(stream.toDS(), Steps.of("a", "b"), 1000L,
+        measures = Seq(CepSql.SpanAgg("SUM", "props", "p")))
     }
     assert(e.getMessage.contains("numeric columns"))
   }

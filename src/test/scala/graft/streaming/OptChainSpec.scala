@@ -29,7 +29,7 @@ class OptChainSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
     val name = s"optchain_${System.nanoTime}"
-    val q = PatternMatch.detectOpt(stream.toDS(), steps, optional, withinMs)
+    val q = ChainEngine.detect(stream.toDS(), steps, withinMs, optional)
       .writeStream.queryName(name).format("memory").outputMode("append")
       .start()
     val data = eventsDs.orderBy("ts", "event_id").collect()

@@ -18,7 +18,7 @@ class PatternMatchSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
     val name = s"pat_${System.nanoTime()}"
-    val q = PatternMatch.detect(stream.toDS(), steps, withinMs)
+    val q = ChainEngine.detect(stream.toDS(), Steps.of(steps: _*), withinMs)
       .writeStream.queryName(name).format("memory").outputMode("append")
       .start()
     val data = eventsDs.orderBy("ts", "event_id").collect()
@@ -30,7 +30,7 @@ class PatternMatchSpec extends SparkSpec {
       .as[(Long, Seq[Long])].collect().toSet
   }
 
-  test("2-step pattern reduces exactly to CepSequence / q_cep_seq") {
+  test("2-step pattern reduces exactly to q_cep_seq") {
     val got = runPattern(Seq("signup", "purchase"), 30 * 60 * 1000L, 5)
     val want = graft.SparkEntry.queries("q_cep_seq")(spark, sf)
       .select(col("user_id"), array(col("sid"), col("pid")))
@@ -54,7 +54,7 @@ class PatternMatchSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
     val name = s"pat_pred_${System.nanoTime()}"
-    val q = PatternMatch.detectWhere(stream.toDS(),
+    val q = ChainEngine.detect(stream.toDS(),
         Seq(e => e.event_type == "signup",
           e => e.event_type == "purchase" && e.value > 50.0),
         30 * 60 * 1000L)

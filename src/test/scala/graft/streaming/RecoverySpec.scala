@@ -88,7 +88,7 @@ class RecoverySpec extends SparkSpec {
   }
 
   test("chain detector resumes from checkpoint: open partials survive (r6)") {
-    // the N-step CEP state machine (PatternMatch, flatMapGroupsWithState)
+    // the N-step CEP state machine (ChainEngine, flatMapGroupsWithState)
     // restarted mid-chain: partial matches opened in phase 1 must
     // complete from phase-2 events via the restored state store —
     // the cut is chosen so two real chains straddle it
@@ -100,10 +100,10 @@ class RecoverySpec extends SparkSpec {
       .select("event_id", "ts", "user_id", "event_type", "value")
     val schema = events.schema
     def startQuery() =
-      PatternMatch.detect(
+      ChainEngine.detect(
           Sources.fileStream(spark, in.getAbsolutePath, schema)
             .as[CepEvent],
-          Seq("signup", "click", "purchase"), 24L * 3600 * 1000)
+          Steps.of("signup", "click", "purchase"), 24L * 3600 * 1000)
         .writeStream.format("parquet")
         .option("path", outDir.getAbsolutePath)
         .option("checkpointLocation", ckpt.getAbsolutePath)
@@ -132,7 +132,7 @@ class RecoverySpec extends SparkSpec {
   }
 
   test("measured detector resumes from checkpoint: accumulators survive (r7)") {
-    // detectMeasure partials carry span ACCUMULATORS (sum/cnt/min/max),
+    // measured partials carry span ACCUMULATORS (sum/cnt/min/max),
     // not just matched ids — a restart mid-span must restore them or the
     // measure under-counts the phase-1 events. The cut splits user 12's
     // two matches (anchors 981/984 → completion 992, spans holding 6 and
@@ -145,12 +145,11 @@ class RecoverySpec extends SparkSpec {
       .select("event_id", "ts", "user_id", "event_type", "value")
     val schema = events.schema
     def startQuery() =
-      PatternMatch.detectMeasure(
+      ChainEngine.detect(
           Sources.fileStream(spark, in.getAbsolutePath, schema)
             .as[CepEvent],
-          Seq((e: CepEvent) => e.event_type == "signup",
-            (e: CepEvent) => e.event_type == "purchase"),
-          12L * 3600 * 1000, "COUNT")
+          Steps.of("signup", "purchase"), 12L * 3600 * 1000,
+          measures = Seq(CepSql.SpanAgg("COUNT", "*", "measure")))
         .writeStream.format("parquet")
         .option("path", outDir.getAbsolutePath)
         .option("checkpointLocation", ckpt.getAbsolutePath)
@@ -163,7 +162,7 @@ class RecoverySpec extends SparkSpec {
       .write.mode("append").parquet(in.getAbsolutePath)
     val q2 = startQuery(); q2.processAllAvailable(); q2.stop()
     val got = spark.read.parquet(outDir.getAbsolutePath)
-      .select("user_id", "step_ids", "measure")
+      .select(col("user_id"), col("step_ids"), col("vals")(0))
       .as[(Long, Seq[Long], Double)].collect()
     assert(got.length == got.toSet.size, "no duplicate matches")
     Tables.load(spark, sf)
@@ -186,7 +185,7 @@ class RecoverySpec extends SparkSpec {
 
   test("optional-absence detector resumes from checkpoint: pending " +
     "verdicts and cancels survive (r8)") {
-    // ChainAbsenceDetector.detectOptWhere state holds three things a
+    // ChainEngine's optional-absence state holds three things a
     // restart must restore: open prefix partials (with their None
     // skip slots), COMPLETED prefixes awaiting the watermark verdict,
     // and the late-first cancel memory. Cut mid-fixture, finish after a
@@ -204,12 +203,11 @@ class RecoverySpec extends SparkSpec {
       .select("event_id", "ts", "user_id", "event_type", "value")
     val schema = events.schema
     def startQuery() =
-      ChainAbsenceDetector.detectOptWhere(
+      ChainEngine.detect(
           Sources.fileStream(spark, in.getAbsolutePath, schema)
-            .as[CepEvent],
-          Seq("signup", "click", "view", "purchase")
-            .map(t => (e: CepEvent) => e.event_type == t),
-          Seq(false, true, false, false), 12L * 3600 * 1000, "0 seconds")
+            .withWatermark("ts", "0 seconds").as[CepEvent],
+          Steps.of("signup", "click", "view"), 12L * 3600 * 1000,
+          Seq(false, true, false), absent = Some(_.event_type == "purchase"))
         .writeStream.format("parquet")
         .option("path", outDir.getAbsolutePath)
         .option("checkpointLocation", ckpt.getAbsolutePath)

@@ -9,10 +9,10 @@ import graft.{SparkSpec, Tables}
 class StateBoundSpec extends SparkSpec {
   import spark.implicits._
 
-  test("CepSequence state rows stay bounded by key count, not events seen") {
+  test("2-step chain state rows stay bounded by key count, not events seen") {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
-    val q = CepSequence.detect(stream.toDS(), "signup", "purchase",
+    val q = ChainEngine.detect(stream.toDS(), Steps.of("signup", "purchase"),
         30L * 60 * 1000)
       .writeStream.queryName("state_bound").format("memory")
       .outputMode("append").start()
@@ -37,14 +37,14 @@ class StateBoundSpec extends SparkSpec {
     assert(maxStateRows > 0, "state metrics should have been recorded")
   }
 
-  test("PatternMatch chain state rows stay bounded by key count (r6)") {
+  test("N-step chain state rows stay bounded by key count (r6)") {
     // the N-step detector keeps a LIST of open partials per key but only
     // ONE state row per key; partials prune once their window can no
     // longer complete — same O(open matches) bound as the 2-step machine
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
-    val q = PatternMatch.detect(stream.toDS(),
-        Seq("signup", "click", "purchase"), 24L * 3600 * 1000)
+    val q = ChainEngine.detect(stream.toDS(),
+        Steps.of("signup", "click", "purchase"), 24L * 3600 * 1000)
       .writeStream.queryName("state_bound_chain").format("memory")
       .outputMode("append").start()
     val data = Tables.table(spark, sf, "events")
@@ -67,16 +67,15 @@ class StateBoundSpec extends SparkSpec {
   }
 
   test("optional-absence state rows stay bounded by key count (r8)") {
-    // detectOptWhere keeps partials + pending verdicts + the cancel
+    // the absence form keeps partials + parked verdicts + the cancel
     // memory, all in ONE state row per key; partials and pendings prune
     // against the watermark, cancels against the lateness horizon —
     // the same O(open windows) bound as the other detectors
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
-    val q = ChainAbsenceDetector.detectOptWhere(stream.toDS(),
-        Seq("signup", "click", "view", "purchase")
-          .map(t => (e: CepEvent) => e.event_type == t),
-        Seq(false, true, false, false), 12L * 3600 * 1000, "0 seconds")
+    val q = ChainEngine.detect(stream.toDS().withWatermark("ts", "0 seconds"),
+        Steps.of("signup", "click", "view"), 12L * 3600 * 1000,
+        Seq(false, true, false), absent = Some(_.event_type == "purchase"))
       .writeStream.queryName("state_bound_optabs").format("memory")
       .outputMode("append").start()
     val data = Tables.table(spark, sf, "events")
@@ -172,7 +171,7 @@ class StateBoundSpec extends SparkSpec {
     // thrown StreamingQueryException.
     val tripped =
       try { spark.sparkContext.setLogLevel("FATAL"); run(Some(100), 2000) }
-      finally spark.sparkContext.setLogLevel("WARN")
+      finally spark.sparkContext.setLogLevel("ERROR")
     assert(tripped.isDefined, "the cap must fail the query")
     def rootMsg(t: Throwable): String = {
       var c: Throwable = t

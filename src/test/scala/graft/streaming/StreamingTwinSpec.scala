@@ -801,7 +801,7 @@ class StreamingTwinSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
     val name = "twin_cep"
-    val q = CepSequence.detect(stream.toDS(), "signup", "purchase",
+    val q = ChainEngine.detect(stream.toDS(), Steps.of("signup", "purchase"),
         30L * 60 * 1000)
       .writeStream.queryName(name).format("memory").outputMode("append")
       .start()
@@ -812,7 +812,9 @@ class StreamingTwinSpec extends SparkSpec {
     }
     q.stop()
     val got = spark.table(name)
-      .select("user_id", "sid", "pid", "s_ts", "p_ts")
+      .select(col("user_id"), col("step_ids")(0).as("sid"),
+        col("step_ids")(1).as("pid"), col("start_ts").as("s_ts"),
+        col("end_ts").as("p_ts"))
     val want = graft.SparkEntry.queries("q_cep_seq")(spark, sf)
     assert(rows(got) == rows(want))
     assert(got.count() > 0, "expected at least one signup->purchase match")

@@ -108,7 +108,7 @@ class SubmitSqlSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
     stream.toDF().createOrReplaceTempView("pat_events")
-    // sequence form → CepSequence; results land in the memory sink
+    // sequence form → ChainEngine; results land in the memory sink
     val q = ContinuousQueries.submitPattern(spark,
       """SELECT * FROM pat_events
          MATCH PATTERN (signup THEN purchase WITHIN '30' MINUTES)
@@ -168,11 +168,95 @@ class SubmitSqlSpec extends SparkSpec {
     }
   }
 
+  test("submitPattern: `a THEN NOT b` streams on the default state store " +
+    "provider") {
+    // the absence form runs on flatMapGroupsWithState, so it needs no
+    // RocksDB session of its own
+    assert(!spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+      .exists(_.contains("RocksDB")), "the shared session keeps the default")
+    implicit val sq = spark.sqlContext
+    val stream = MemoryStream[CepEvent]
+    stream.toDF().createOrReplaceTempView("pat_abs_default")
+    val q = ContinuousQueries.submitPattern(spark,
+      """SELECT * FROM pat_abs_default
+         MATCH PATTERN (signup THEN NOT purchase WITHIN '30' MINUTES)
+         PARTITION BY user_id""", "svc_abs_default")
+    try {
+      stream.addData(
+        CepEvent(1, Timestamp.valueOf("2026-01-01 00:00:00"), 7, "signup", 0),
+        CepEvent(2, Timestamp.valueOf("2026-01-01 00:00:00"), 8, "signup", 0),
+        CepEvent(3, Timestamp.valueOf("2026-01-01 00:10:00"), 8, "purchase", 0))
+      q.processAllAvailable()
+      // advance the watermark past both windows, then fire the timers
+      stream.addData(
+        CepEvent(9, Timestamp.valueOf("2026-01-02 00:00:00"), 99, "view", 0))
+      q.processAllAvailable()
+      stream.addData(
+        CepEvent(10, Timestamp.valueOf("2026-01-02 00:00:01"), 99, "view", 0))
+      q.processAllAvailable()
+      val out = spark.table("svc_abs_default")
+      assert(out.columns.toSeq === Seq("user_id", "sid", "s_ts"))
+      val got = out.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2))).toSet
+      assert(got === Set((7L, 1L, Timestamp.valueOf("2026-01-01 00:00:00"))),
+        "only the signup without a purchase is an absence")
+    } finally {
+      if (q.isActive) q.stop()
+      spark.catalog.dropTempView("pat_abs_default")
+    }
+  }
+
+  test("submitPattern: MEASURES x THEN NOT kills a prefix that completes " +
+    "late with a NOT event processed before it (== CepSql.sql)") {
+    // user 7: batch 1 brings a@00:01 and z@00:05, batch 2 the late
+    // b@00:03 (inside the 10-minute lateness). The prefix (a, b) only
+    // exists from batch 2 on, after its killer z was processed, so the
+    // engine must remember z. User 8 has the same prefix and no z: the
+    // absence that must still emit.
+    implicit val sq = spark.sqlContext
+    def ev(id: Long, u: Long, t: String, typ: String) =
+      CepEvent(id, Timestamp.valueOf(s"2026-01-01 $t"), u, typ, 1.0)
+    val batches = Seq(
+      Seq(ev(1, 7, "00:01:00", "a"), ev(2, 7, "00:05:00", "z"),
+        ev(11, 8, "00:01:00", "a")),
+      Seq(ev(3, 7, "00:03:00", "b"), ev(12, 8, "00:03:00", "b")),
+      // advance the watermark past every window, then fire the timers
+      Seq(ev(90, 9, "02:00:00", "x")),
+      Seq(ev(91, 9, "02:00:01", "x")))
+    val pat = (tbl: String) =>
+      s"""SELECT * FROM $tbl
+         MATCH PATTERN (a THEN b THEN NOT z WITHIN '30' MINUTES)
+         PARTITION BY user_id
+         MEASURES COUNT(*) AS n"""
+    val stream = MemoryStream[CepEvent]
+    stream.toDF().createOrReplaceTempView("pat_mabs_late")
+    batches.flatten.toDF().createOrReplaceTempView("pat_mabs_late_all")
+    val q = ContinuousQueries.submitPattern(spark, pat("pat_mabs_late"),
+      "svc_mabs_late", lateness = "10 minutes")
+    try {
+      batches.foreach { b => stream.addData(b); q.processAllAvailable() }
+      val got = spark.table("svc_mabs_late").collect().map { r =>
+        val ids = r.getSeq[Long](1)
+        (r.getLong(0), ids.head, ids(1), r.getAs[Long]("n"))
+      }.toSet
+      val want = CepSql.sql(spark, pat("pat_mabs_late_all"))
+        .select("user_id", "id_1", "id_2", "n").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toSet
+      assert(want === Set((8L, 11L, 12L, 2L)))
+      assert(got === want)
+    } finally {
+      if (q.isActive) q.stop()
+      Seq("pat_mabs_late", "pat_mabs_late_all")
+        .foreach(spark.catalog.dropTempView)
+    }
+  }
+
   test("submitPattern: chain and quantified forms dispatch; misuse is loud") {
     implicit val sq = spark.sqlContext
     val stream = MemoryStream[CepEvent]
     stream.toDF().createOrReplaceTempView("pat_events2")
-    // 3-step chain → PatternMatch
+    // 3-step chain → ChainEngine
     val q = ContinuousQueries.submitPattern(spark,
       """SELECT * FROM pat_events2
          MATCH PATTERN (signup THEN click THEN purchase WITHIN '2' HOURS)
@@ -215,7 +299,7 @@ class SubmitSqlSpec extends SparkSpec {
       if (q3.isActive) q3.stop()
       spark.catalog.dropTempView("pat_events3")
     }
-    // MEASURES → PatternMatch.detectMeasure (r7): the click between the
+    // MEASURES → ChainEngine (r7): the click between the
     // matched rows is part of the span (COUNT 3, SUM 8.0)
     val streamM = MemoryStream[CepEvent]
     streamM.toDF().createOrReplaceTempView("pat_meas")
@@ -488,7 +572,7 @@ class SubmitSqlSpec extends SparkSpec {
            MEASURES SUM(other_col)""", "svc_badmeas")
     }
     assert(eMeas.getMessage.contains("numeric columns"))
-    // PERMUTE(a, b) → two directional CepSequence legs unioned (r7):
+    // PERMUTE(a, b) → two directional ChainEngine legs unioned (r7):
     // user 7 matches signup→purchase, user 8 purchase→signup
     val streamP = MemoryStream[CepEvent]
     streamP.toDF().createOrReplaceTempView("pat_perm")
@@ -514,7 +598,7 @@ class SubmitSqlSpec extends SparkSpec {
       if (qP.isActive) qP.stop()
       spark.catalog.dropTempView("pat_perm")
     }
-    // optional step → PatternMatch.detectOpt (r7): user 7 skips the
+    // optional step → ChainEngine (r7): user 7 skips the
     // click (purchase arrives first), user 8 takes it
     val streamO = MemoryStream[CepEvent]
     streamO.toDF().createOrReplaceTempView("pat_opt")
@@ -540,8 +624,8 @@ class SubmitSqlSpec extends SparkSpec {
       if (qO.isActive) qO.stop()
       spark.catalog.dropTempView("pat_opt")
     }
-    // ...optional + absence dispatches to ChainAbsenceDetector's
-    // optional form (r8, previously rejected): user 7 skips b and has
+    // ...optional + absence dispatches to ChainEngine's
+    // optional absence form (r8, previously rejected): user 7 skips b and has
     // no d → absence with a null slot; user 8 completes and is
     // cancelled by its d
     val streamOA = MemoryStream[CepEvent]
@@ -811,7 +895,7 @@ class SubmitSqlSpec extends SparkSpec {
       if (qQA.isActive) qQA.stop()
       spark.catalog.dropTempView("pat_qabs")
     }
-    // NOT after a multi-step chain → ChainAbsenceDetector (r7): the
+    // NOT after a multi-step chain → ChainEngine (r7): the
     // matched signup→click prefix with no purchase emits once the
     // watermark proves the window empty
     val streamAbs = MemoryStream[CepEvent]
@@ -971,8 +1055,8 @@ class SubmitSqlSpec extends SparkSpec {
     // conditioned ABSENCE (r8, previously rejected): only a purchase
     // satisfying the condition cancels — user 7's cheap purchase is
     // invisible, so the absence still emits; user 8's expensive one
-    // cancels. The absence arm rides transformWithState, which needs
-    // the RocksDB provider → own session (like AbsenceSpec).
+    // cancels. Runs on its own RocksDB session (like AbsenceSpec), so
+    // the engine stays covered on that provider too.
     locally {
       val sA = spark.newSession()
       StreamingConf.applyTo(sA)
